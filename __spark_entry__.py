@@ -47,7 +47,9 @@ from fbs_data_pipelines_spark.functions.text import (
 from fbs_data_pipelines_spark.functions.vectors import cosine_similarity, l2_norm
 from fbs_data_pipelines_spark.operators.audit import authlog_table, merge_snapshot
 from fbs_data_pipelines_spark.operators.dedup import (
+    MINHASH_PRIME,
     dedup_exact,
+    minhash_coeffs,
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard,
@@ -5141,12 +5143,20 @@ _SHINGLES = f"""
     )
 """
 
-# hash i = 8-hex window i%4 of md5((i//4) ':' shingle) — 4 independent
-# 32-bit hash functions per digest, mirroring operators/dedup.py
-_MINHASH_SIG = _SHINGLES + ",\n    sig AS (\n        SELECT doc_id,\n" + ",\n".join(
-    f"            min(substr(md5('{i // 4}:' || shingle), {1 + 8 * (i % 4)}, 8)) AS mh_{i}"
-    for i in range(8)
-) + "\n        FROM shingles GROUP BY doc_id\n    )"
+# h = first 32 bits of md5(shingle) as BIGINT; hash i = (a_i·h + b_i)
+# mod (2^31 − 1), the same constants as operators/dedup.py (the product
+# stays below 2^62, so BIGINT arithmetic is exact)
+_MINHASH_SIG = _SHINGLES + """,
+    hashed AS (
+        SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h
+        FROM shingles
+    ),
+    sig AS (
+        SELECT doc_id,
+""" + ",\n".join(
+    f"            min(({a} * h + {b}) % {MINHASH_PRIME}) AS mh_{i}"
+    for i, (a, b) in enumerate(minhash_coeffs(8))
+) + "\n        FROM hashed GROUP BY doc_id\n    )"
 
 _JACCARD_TAIL = """
     sizes AS (

@@ -64,8 +64,8 @@ def whitespace_token_count(c: Column | str) -> Column:
 def word_shingles(c: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles (array<string>); < n words → empty array.
 
-    Built with sequence+transform (JVM-side), no explode needed at the
-    call site: callers explode lazily so Spark streams the expansion.
+    No explode needed at the call site: callers explode lazily so
+    Spark streams the expansion.
     """
     return word_shingles_arr(tokens(c), n)
 
@@ -231,16 +231,6 @@ def doc_fingerprint(c: Column | str, length: int = 16) -> Column:
     return F.substring(F.md5(normalize_text(c)), 1, length)
 
 
-def md5_hash_hex(c: Column | str, salt: int | None = None, length: int = 8) -> Column:
-    """Portable hash primitive: first ``length`` hex chars of
-    md5(salt:value). Lexicographic order == numeric order (fixed
-    width), so ``min()`` over these is a valid MinHash component."""
-    col = _col(c)
-    if salt is not None:
-        col = F.concat(F.lit(f"{salt}:"), col)
-    return F.substring(F.md5(col), 1, length)
-
-
 def rolling_fingerprint(
     c: Column | str, base: int = 31, mod: int = 2_147_483_647
 ) -> Column:
@@ -367,11 +357,18 @@ def pmi_collocations(
 
 
 def word_shingles_arr(toks_col, n: int):
-    """word_shingles over an ALREADY-tokenized array column (avoids
-    re-normalizing when the caller holds the token array)."""
-    t = F.col(toks_col) if isinstance(toks_col, str) else toks_col
-    idx = F.sequence(F.lit(0), F.size(t) - n)
-    shingle = lambda i: F.concat_ws(" ", F.slice(t, i + 1, n))  # noqa: E731
-    return F.when(F.size(t) >= n, F.transform(idx, shingle)).otherwise(
+    """word_shingles over an ALREADY-tokenized array column: ``zip_with``
+    over ``t`` and its shifted slices, cut to size(t) − n + 1 grams.
+    The token array must stay OUT of every lambda body: Spark runs
+    higher-order lambdas interpreted, so a captured array expression is
+    re-evaluated per element — with ``t`` the tokenizer, that made
+    shingling O(words²) per doc. As an argument it runs a fixed number
+    of times per row; project it as a named column to run it once."""
+    t = grams = _col(toks_col)
+    for k in range(1, n):
+        grams = F.zip_with(
+            grams, F.slice(t, k + 1, F.size(t)), lambda a, b: F.concat_ws(" ", a, b)
+        )
+    return F.when(F.size(t) >= n, F.slice(grams, 1, F.size(t) - (n - 1))).otherwise(
         F.array().cast("array<string>")
     )

@@ -15,12 +15,15 @@ designed scale-first:
 - embedding cosine: threshold pairs via block-join; see
   operators/similarity.py for the ANN scale path.
 
-Determinism: every hash is an md5-hex-substring (fixed width ⇒
-lexicographic min == numeric min), so a DuckDB oracle reproduces the
-exact signatures/pairs — no engine-private hash functions.
+Determinism: every hash starts from md5 (MinHash then derives its K
+values from one 32-bit md5 window by exact BIGINT arithmetic), so a
+DuckDB oracle reproduces the exact signatures/pairs — no
+engine-private hash functions.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -30,7 +33,8 @@ from fbs_data_pipelines_spark.functions.vectors import lit_array
 from fbs_data_pipelines_spark.functions.cleaning import round_half_up
 from fbs_data_pipelines_spark.functions.text import (
     normalize_text,
-    word_shingles,
+    tokens,
+    word_shingles_arr,
 )
 
 
@@ -73,51 +77,64 @@ def shingle_table(
     Per-doc dedup happens BEFORE the explode (``array_distinct`` on
     the shingle array), so this is a pure narrow map — no shuffle at
     all. (Shingle sets are per-document; no cross-doc distinct needed.)
+    Tokens are a named column, so the tokenizer runs once per doc.
     """
     from fbs_data_pipelines_spark.operators.partitioning import ensure_parallelism
 
     src = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    return src.select(
+    return src.select(F.col(id_col), tokens(text_col).alias("__toks")).select(
         F.col(id_col),
-        F.explode(F.array_distinct(word_shingles(text_col, n))).alias("shingle"),
+        F.explode(F.array_distinct(word_shingles_arr("__toks", n))).alias("shingle"),
     )
 
 
-def _minhash_aggs(num_hashes: int) -> list:
-    """The K min-hash aggregate expressions.
+#: modulus of the MinHash family — the Mersenne prime 2^31 − 1
+MINHASH_PRIME = 2_147_483_647
 
-    An md5 digest is 128 bits = four independent 32-bit words, so one
-    salted md5 yields FOUR hash functions (8-hex windows at offsets
-    1/9/17/25) — hash function i reads window i%4 of md5(i//4 ':' x).
-    Computing ceil(K/4) md5s instead of K cuts the dominant per-shingle
-    hashing cost 4×. Fixed-width hex keeps lexicographic min == minwise
-    hash; the DuckDB oracle mirrors the same windows exactly."""
-    return [
-        F.min(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{i // 4}:"), F.col("shingle"))),
-                1 + 8 * (i % 4),
-                8,
-            )
-        ).alias(f"mh_{i}")
+
+def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
+    """Fixed (a_i, b_i) of hash i, 1 ≤ a_i < 2^30 and 0 ≤ b_i < 2^31 − 1,
+    read from md5('minhash:i') so any engine can rebuild them."""
+    words = [
+        int(hashlib.md5(f"minhash:{i}".encode()).hexdigest()[:16], 16)
         for i in range(num_hashes)
     ]
+    return [(1 + (w >> 32) % ((1 << 30) - 1), (w & 0xFFFFFFFF) % MINHASH_PRIME) for w in words]
+
+
+def _minhash_aggs(sh: DataFrame, id_col: str, num_hashes: int, *extra) -> DataFrame:
+    """Per-doc bigint min-hashes mh_0..mh_{K-1} over a shingle table,
+    plus any ``extra`` aggregates.
+
+    Each shingle is hashed ONCE, to h = first 32 bits of md5(shingle)
+    (a named column ahead of the aggregate); hash i is (a_i·h + b_i)
+    mod (2^31 − 1). a_i < 2^30 and h < 2^32 keep the product below
+    2^62, so BIGINT arithmetic is exact in Spark and DuckDB alike. An
+    id collision can only change which pairs become LSH candidates:
+    verification compares shingle strings, so Jaccard stays exact."""
+    h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast("long")
+    mins = [
+        F.min((F.lit(a) * F.col("__h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh_{i}")
+        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
+    ]
+    return sh.select(F.col(id_col), h.alias("__h")).groupBy(id_col).agg(*mins, *extra)
 
 
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 8, n: int = 3
 ) -> DataFrame:
-    """Per-doc MinHash signature: columns mh_0..mh_{K-1}.
+    """Per-doc MinHash signature: bigint columns mh_0..mh_{K-1}, mh_i =
+    min over the doc's shingles of (a_i·h + b_i) mod (2^31 − 1), with
+    h = first 32 bits of md5(shingle) (``_minhash_aggs``).
 
     Shingle sets are deduped per-doc BEFORE the explode (narrow), then
     one codegen'd hash aggregate computes all K mins with map-side
-    partial aggregation — the only shuffle carries ≤ K·8 bytes per
-    doc. (A zero-shuffle array_min/transform variant was measured 5×
+    partial aggregation — the only shuffle carries K·8 bytes per doc.
+    (A zero-shuffle array_min/transform variant was measured 5×
     slower: Spark's higher-order lambdas are interpreted, while
     explode+groupBy stays in whole-stage codegen.) Docs with < n words
     produce no signature (empty shingle set)."""
-    sh = shingle_table(df, id_col, text_col, n)
-    return sh.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
+    return _minhash_aggs(shingle_table(df, id_col, text_col, n), id_col, num_hashes)
 
 
 def minhash_lsh_pairs(
@@ -131,7 +148,7 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact-Jaccard verify.
 
-    Pipeline: signatures → band values (concat of rows-per-band
+    Pipeline: signatures → band keys (xxhash64 of each band's
     hashes) → self-join per band bucket (candidates) → verify with
     exact shingle-set Jaccard → filter ≥ threshold. Returns
     (id_a, id_b, jaccard) with id_a < id_b, rounded to 4dp.
@@ -146,7 +163,7 @@ def minhash_lsh_pairs(
     # The shingle table feeds BOTH the signature pass and the verify
     # pass, and each self-join streams its subtree twice — without
     # materialization the shingling work runs ~4×. Persist the two
-    # small intermediates (sh: ids+shingles, sig: K hex codes per doc;
+    # small intermediates (sh: ids+shingles, sig: K bigints per doc;
     # both ≪ input size). On a cluster the same role is played by a
     # shuffle-materialized temp or exchange reuse; MEMORY_AND_DISK
     # spills safely if a 100 TB corpus makes sh large.
@@ -156,19 +173,13 @@ def minhash_lsh_pairs(
     # one pass over sh produces signatures AND the |A| sizes the
     # Jaccard verification needs (saves a second full groupBy scan)
     sig = scope.persist(
-        sh.groupBy(id_col)
-        .agg(*_minhash_aggs(num_hashes), F.count("*").alias("sz"))
+        _minhash_aggs(sh, id_col, num_hashes, F.count("*").alias("sz"))
     )
 
-    # band bucket key = ONE xxhash64 over (band index, band's minhash
-    # codes): an 8-byte long instead of the former ~24-byte
-    # concat_ws string — ~3× less bucket-join key payload to shuffle
-    # at scale and a cheaper hash/compare; measured at sf0.1 the
-    # candidate stage dropped 0.348→0.298 s with an IDENTICAL
-    # candidate set (r9 audit, EVIDENCE_r09.md §4). A 64-bit
-    # collision can only ADD a candidate pair (same-band values still
-    # collide), and the exact-Jaccard verify filters any such pair,
-    # so the operator's OUTPUT is collision-invariant.
+    # band bucket key = ONE xxhash64 over (band index, band's
+    # minhashes): an 8-byte join key. A 64-bit collision can only ADD
+    # a candidate pair, which the exact-Jaccard verify filters, so
+    # the operator's OUTPUT is collision-invariant.
     band_cols = []
     for b in range(bands):
         parts = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
@@ -580,9 +591,9 @@ def shared_span_pairs(
 
     scope = CacheScope()
     src = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    shp = src.select(
+    shp = src.select(F.col(id_col), tokens(text_col).alias("__toks")).select(
         F.col(id_col),
-        F.posexplode(word_shingles(text_col, n)).alias("pos", "shingle"),
+        F.posexplode(word_shingles_arr("__toks", n)).alias("pos", "shingle"),
     )
     if max_occurrences is not None:
         shp = scope.persist(shp)

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fbs_data_pipelines_spark.functions.cleaning import round_half_up
-from fbs_data_pipelines_spark.functions.text import tokens
+from fbs_data_pipelines_spark.functions.text import tokens, word_shingles_arr
 from fbs_data_pipelines_spark.operators.partitioning import ensure_parallelism
 
 #: Gopher-style acceptance bounds (public heuristics; tune per corpus)
@@ -152,17 +152,14 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _word_ngrams(words, n: int):
-    """Word n-gram array from a (filtered, non-empty) word array —
-    the ONE tokenize-and-shingle rule both n-gram operators and their
-    SQL oracles mirror; < n words → empty array."""
-    if n == 1:
-        return words
-    idx = F.sequence(F.lit(1), F.size(words) - (n - 1))
-    return F.when(
-        F.size(words) >= n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
+def _doc_ngrams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, __grams): each document's word n-grams over its non-empty
+    tokens, projected once per document — the rule both n-gram
+    operators and their SQL oracles mirror; < n words → empty array."""
+    words = F.filter(tokens(F.col(text_col)), lambda t: t != "")
+    staged = df.select(F.col(id_col), words.alias("__w"))
+    grams = F.col("__w") if n == 1 else word_shingles_arr("__w", n)
+    return staged.select(F.col(id_col), grams.alias("__grams"))
 
 
 def top_ngram_stats(
@@ -177,11 +174,8 @@ def top_ngram_stats(
     carries (doc_id, gram, count) partials only.
     Emits (id, top_gram, top_gram_count, n_grams, top_gram_frac).
     """
-    df = ensure_parallelism(df)
-    words = F.filter(tokens(F.col(text_col)), lambda t: t != "")
-    grams = _word_ngrams(words, n)
-    exploded = df.select(
-        F.col(id_col), F.explode(grams).alias("gram")
+    exploded = _doc_ngrams(ensure_parallelism(df), id_col, text_col, n).select(
+        F.col(id_col), F.explode("__grams").alias("gram")
     )
     counts = exploded.groupBy(id_col, "gram").agg(
         F.count("*").alias("cnt")
@@ -232,10 +226,8 @@ def boilerplate_ngram_stats(
     the corpus. Total: 2 map-side-combined shuffles, 1 broadcast.
     """
     df = ensure_parallelism(df)
-    words = F.filter(tokens(F.col(text_col)), lambda t: t != "")
-    grams = _word_ngrams(words, n)
-    doc_grams = df.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("gram")
+    doc_grams = _doc_ngrams(df, id_col, text_col, n).select(
+        F.col(id_col), F.explode(F.array_distinct("__grams")).alias("gram")
     )
     n_docs = df.select(F.count("*").alias("__n_docs"))
     gram_df = (

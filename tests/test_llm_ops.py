@@ -6,10 +6,14 @@ plus plan-shape assertions that the narrow operators stay shuffle-free
 (the property that matters at 100 TB).
 """
 
+import hashlib
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
+
+from fbs_data_pipelines_spark.caching import release_cache
 
 from fbs_data_pipelines_spark.functions.text import (
     doc_fingerprint,
@@ -25,6 +29,7 @@ from fbs_data_pipelines_spark.operators.dedup import (
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard,
+    shared_span_pairs,
     shingle_table,
     simhash,
     simhash_pairs,
@@ -98,6 +103,70 @@ def test_word_shingles_short_doc_empty(spark):
     df = spark.createDataFrame([(1, "only two")], "id long, text string")
     [r] = df.select(word_shingles("text", 3).alias("s")).collect()
     assert r.s == []
+
+
+def _ref_tokens(text):
+    """Pure-Python tokenizer: lowercase, [^a-z0-9]+ → space, trim, split."""
+    return re.sub(r"[^a-z0-9]+", " ", text.lower()).strip(" ").split(" ")
+
+
+def _ref_shingles(text, n):
+    if text is None:
+        return []
+    t = _ref_tokens(text)
+    return [" ".join(t[i : i + n]) for i in range(len(t) - n + 1)]
+
+
+SHINGLE_TEXTS = [
+    "The quick, brown fox -- jumps over the lazy dog; the quick fox!",
+    "  Leading and trailing   spaces  ",
+    "one two three four five six",
+    "a b",
+    "only four words here",
+    "",
+    "!!! ... ???",
+    None,
+]
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_word_shingles_match_python_reference(spark, n):
+    # in order, duplicates kept: posexplode callers (shared spans)
+    # read the array index as the token position
+    df = spark.createDataFrame(
+        list(enumerate(SHINGLE_TEXTS)), "id long, text string"
+    )
+    got = {
+        r.id: r.s
+        for r in df.select("id", word_shingles("text", n).alias("s")).collect()
+    }
+    assert got == {i: _ref_shingles(t, n) for i, t in enumerate(SHINGLE_TEXTS)}
+
+
+def _lambda_bodies(plan):
+    """Every ``lambdafunction(...)`` argument list in a plan string."""
+    out = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[m.end() : i - 1])
+    return out
+
+
+def test_tokenizer_never_inside_a_shingling_lambda(spark, docs):
+    # Spark runs higher-order lambdas interpreted: a tokenizer captured
+    # in a lambda body re-runs per shingle (O(words²) per document)
+    for df in (
+        shingle_table(docs, "doc_id", "text"),
+        docs.select(word_shingles("text", 3).alias("s")),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "regexp_replace" in plan  # the tokenizer is in the plan...
+        bodies = _lambda_bodies(plan)
+        assert bodies  # ...the shingler's lambdas too...
+        assert not [b for b in bodies if "regexp_replace" in b]  # ...apart
 
 
 def test_text_profile_matches_per_column_helpers(spark, docs):
@@ -239,6 +308,91 @@ def test_minhash_lsh_finds_planted_neardup(spark, docs):
     # exact jaccard verified against the candidate's shingle sets:
     # 8 shingles each, 7 shared → 7/9
     assert pairs[0].jaccard == round(7 / 9, 4)
+
+
+def test_minhash_signatures_match_md5_reference(spark):
+    # pins the hash family the DuckDB oracle mirrors: h = first 32 bits
+    # of md5(shingle); mh_i = min (a_i·h + b_i) mod (2^31 − 1), with
+    # (a_i, b_i) read from md5('minhash:i')
+    texts = {
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "Lorem ipsum dolor sit amet, lorem ipsum dolor",
+        3: "one two three",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    k, p = 8, 2**31 - 1
+    coeffs = []
+    for i in range(k):
+        w = int(hashlib.md5(f"minhash:{i}".encode()).hexdigest()[:16], 16)
+        coeffs.append((1 + (w >> 32) % (2**30 - 1), (w & 0xFFFFFFFF) % p))
+    assert all(1 <= a < 2**30 and 0 <= b < p for a, b in coeffs)
+    want = {}
+    for doc, text in texts.items():
+        hs = [int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+              for s in set(_ref_shingles(text, 3))]
+        want[doc] = tuple(min((a * h + b) % p for h in hs) for a, b in coeffs)
+    sig = minhash_signatures(df, "doc_id", "text", num_hashes=k)
+    assert dict(sig.dtypes) == {"doc_id": "bigint", **{f"mh_{i}": "bigint" for i in range(k)}}
+    got = {r.doc_id: tuple(r[f"mh_{i}"] for i in range(k)) for r in sig.collect()}
+    assert got == want
+
+
+def test_minhash_lsh_jaccard_equals_ngram_jaccard(spark):
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    rows = [
+        (1, base),
+        (2, base.replace("iota", "omega")),
+        (3, base + " nu xi"),
+        (4, base.replace("beta", "bravo").replace("kappa", "kilo")),
+        (5, "completely unrelated words about something else entirely today"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    lsh = minhash_lsh_pairs(df, "doc_id", "text", num_hashes=16, bands=16, threshold=0.0)
+    exact = ngram_jaccard(df, "doc_id", "text", n=3)
+    got = {(r.id_a, r.id_b): r.jaccard for r in lsh.collect()}
+    ref = {(r.id_a, r.id_b): r.jaccard for r in exact.collect()}
+    release_cache(lsh)
+    release_cache(exact)
+    assert {(1, 2), (1, 3), (2, 3)} <= set(got)
+    assert got == {pair: ref[pair] for pair in got}
+
+
+def _ref_shared_spans(texts, n, min_span):
+    """Brute force: maximal runs of shared positional n-grams per pair."""
+    grams = {d: _ref_shingles(t, n) for d, t in texts.items()}
+    out = {}
+    for a in sorted(texts):
+        for b in sorted(texts):
+            if a >= b:
+                continue
+            hits = {(i, i - j) for i, g in enumerate(grams[a])
+                    for j, h in enumerate(grams[b]) if g == h}
+            spans = []
+            for i, diag in hits:
+                if (i - 1, diag) in hits:
+                    continue  # not the first gram of a run
+                k = 1
+                while (i + k, diag) in hits:
+                    k += 1
+                if k + n - 1 >= min_span:
+                    spans.append(k + n - 1)
+            if spans:
+                out[(a, b)] = (max(spans), len(spans))
+    return out
+
+
+def test_shared_span_pairs_positions_match_reference(spark):
+    texts = {
+        1: "x1 x2 the cat sat on the warm mat today y1 y2 y3 a b c d e",
+        2: "the cat sat on the warm mat today z1 z2 a b c d e",
+        3: "q1 q2 q3 q4 the cat sat on the warm mat q5 a b c",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    out = shared_span_pairs(df, "doc_id", "text", n=3, min_span_tokens=4)
+    got = {(r.id_a, r.id_b): (r.span_tokens, r.n_spans) for r in out.collect()}
+    release_cache(out)
+    assert got == _ref_shared_spans(texts, 3, 4)
+    assert got[(1, 2)] == (8, 2)
 
 
 def test_simhash_is_narrow_and_deterministic(spark, docs):
